@@ -145,9 +145,9 @@ def cmd_prepare_corpus(args, spark: SparkSession) -> int:
     sequence packing, queries/pipeline.py) and write the packed sequences
     as Hive-partitioned parquet shards keyed by bucket_len — the artifact
     a trainer's data loader reads per length bucket."""
-    from gridiron_spark.queries import catalog
+    from gridiron_spark.queries.pipeline import training_data_pipeline
 
-    packed = catalog()["training_data_pipeline"].spark_fn(spark, args.sf_dir)
+    packed = training_data_pipeline(spark, args.sf_dir)
     (
         packed.repartition(args.shards, "bucket_len", "seq_idx")
         .write.mode("overwrite")
@@ -165,9 +165,9 @@ def cmd_prepare_corpus(args, spark: SparkSession) -> int:
 
 
 def cmd_compact(args, spark: SparkSession) -> int:
-    from gridiron_spark.io.compact import compact_pool
+    from gridiron_spark.pool import compact_pool
 
-    sort_by = args.sort_by.split(",") if args.sort_by else None
+    sort_by = args.sort_by.split(",") if args.sort_by else ()
     df = compact_pool(
         spark, args.pool, tuple(args.partition_by.split(",")), sort_by=sort_by
     )

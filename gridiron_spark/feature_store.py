@@ -14,9 +14,9 @@ from __future__ import annotations
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from gridiron_spark.ingest import SEASON_COL, derive_season
+from gridiron_spark.ingest import SEASON_COL, write_partitions
+from gridiron_spark.pool import scan_partitions
 
 FRAME_KEY = ("gameId", "playId", "frameId")
 
@@ -35,20 +35,10 @@ class FeatureStore:
         missing = [k for k in FRAME_KEY if k not in df.columns]
         if missing:
             raise ValueError(f"feature df missing key columns: {missing}")
-        if SEASON_COL not in df.columns:
-            df = derive_season(df)
-        (
-            df.repartition(F.col("gameId"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(SEASON_COL, "gameId")
-            .parquet(self._path(feature_set))
-        )
+        write_partitions(df, self._path(feature_set), (SEASON_COL, "gameId"))
 
     def read(self, feature_set: str) -> DataFrame:
-        return self.spark.read.option("basePath", self._path(feature_set)).parquet(
-            self._path(feature_set)
-        )
+        return scan_partitions(self.spark, self._path(feature_set))
 
     def join(
         self,

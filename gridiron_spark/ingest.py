@@ -7,19 +7,22 @@ partition, and let the distributed writer produce the
 ``season=YYYY/gameId=XXXX/`` tree:
 
 - **per-partition upsert** (re-ingesting a game overwrites exactly that game,
-  reference src/ingest.py:82-87) is ``partitionOverwriteMode=dynamic`` — a
+  reference src/ingest.py:82-87) is dynamic partition overwrite — a
   config, not code;
 - **one file per game** (fixed-name ``tracking.parquet`` in the reference) is
   file-count control: repartition by the partition key so each game's rows
-  land in a single task → a single file. At 100 TB a single 10-GB game file
-  would be wrong, so the repartition is optional (``coalesce_partitions``) and
-  ``maxRecordsPerFile`` caps the worst case;
+  land in a single task → a single file, with ``maxRecordsPerFile`` capping
+  the worst case;
 - the driver never materializes data; summaries are one aggregate job.
+
+:func:`write_partitions` is the one writer of this layout (the feature store
+and ``pool.compact_pool`` write through it too).
 """
 
 from __future__ import annotations
 
 import logging
+from collections.abc import Sequence
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -32,6 +35,7 @@ from gridiron_spark.schema.registry import TableSchema
 log = logging.getLogger(__name__)
 
 SEASON_COL = "season"
+MAX_RECORDS_PER_FILE = 5_000_000
 
 
 @dataclass(frozen=True)
@@ -53,6 +57,38 @@ def derive_season(df: DataFrame, game_col: str = "gameId") -> DataFrame:
     )
 
 
+def write_partitions(
+    df: DataFrame,
+    root: str | Path,
+    partition_cols: Sequence[str],
+    sort_by: Sequence[str] = (),
+) -> None:
+    """Write ``df`` as a Hive-partitioned parquet tree under ``root``.
+
+    ``season`` is derived from gameId when it is a partition column the
+    frame lacks. ``repartition(*partition_cols)`` puts every partition's
+    rows in one task (distinct partition tuples may share a task — the
+    writer still splits them into their own directories), so each row
+    shuffles once and each partition directory gets one file.
+    ``sort_by`` orders rows within each file so parquet row-group
+    statistics prune on those columns. Dynamic overwrite replaces only the
+    partitions ``df`` has rows for: re-writing a game replaces that game.
+    """
+    cols = list(partition_cols)
+    if SEASON_COL in cols and SEASON_COL not in df.columns:
+        df = derive_season(df)
+    df = df.repartition(*cols)
+    if sort_by:
+        df = df.sortWithinPartitions(*cols, *sort_by)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
+        .partitionBy(*cols)
+        .parquet(str(root))
+    )
+
+
 class LakeIngestor:
     """CSV → canonical schema → partitioned parquet pool."""
 
@@ -61,16 +97,12 @@ class LakeIngestor:
         spark: SparkSession,
         schema: TableSchema | str | Path,
         pool: str | Path,
-        max_records_per_file: int = 5_000_000,
-        one_file_per_partition: bool = True,
     ):
         self.spark = spark
         self.schema = (
             schema if isinstance(schema, TableSchema) else TableSchema.load(schema)
         )
         self.pool = str(pool)
-        self.max_records_per_file = max_records_per_file
-        self.one_file_per_partition = one_file_per_partition
 
     # -- read + normalize ---------------------------------------------------
 
@@ -116,19 +148,7 @@ class LakeIngestor:
     # -- write ---------------------------------------------------------------
 
     def write(self, df: DataFrame) -> None:
-        part_cols = list(self.schema.partition_by) or ["gameId"]
-        if SEASON_COL in part_cols and SEASON_COL not in df.columns:
-            df = derive_season(df)
-        if self.one_file_per_partition:
-            # co-locate each game in one task → one file per partition dir
-            df = df.repartition(*[F.col(c) for c in part_cols])
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("maxRecordsPerFile", self.max_records_per_file)
-            .partitionBy(*part_cols)
-            .parquet(self.pool)
-        )
+        write_partitions(df, self.pool, self.schema.partition_by or ["gameId"])
 
     # -- summary / dry-run ----------------------------------------------------
 

@@ -21,13 +21,14 @@ def _entity_window() -> Window:
     return Window.partitionBy(*ENTITY_KEY).orderBy("frameId")
 
 
-def is_ball() -> Column:
-    """The ball rule: null nflId, nflId==0, or team=='football'
-    (reference docs/DATA_LAKE_GUIDE.md:144-152; app/main.py:104-106)."""
+def is_ball(side_col: str = "team") -> Column:
+    """The ball rule: null nflId, nflId==0, or a ``football`` side value in
+    ``side_col`` (reference docs/DATA_LAKE_GUIDE.md:144-152;
+    app/main.py:104-106)."""
     return (
         F.col("nflId").isNull()
         | (F.col("nflId") == 0)
-        | (F.lower(F.col("team")) == "football")
+        | (F.lower(F.col(side_col).cast("string")) == "football")
     )
 
 
@@ -58,14 +59,11 @@ def side_split(df: DataFrame, home_is_offense: bool = True) -> DataFrame:
     """
     side_col = "playerSide" if "playerSide" in df.columns else "team"
     side = F.lower(F.col(side_col).cast("string"))
-    ball = (
-        F.col("nflId").isNull() | (F.col("nflId") == 0) | (side == "football")
-    )
     off_vals = ["home", "offense"] if home_is_offense else ["away", "offense"]
     def_vals = ["away", "defense"] if home_is_offense else ["home", "defense"]
     return df.withColumn(
         "side",
-        F.when(ball, "ball")
+        F.when(is_ball(side_col), "ball")
         .when(side.isin(off_vals), "offense")
         .when(side.isin(def_vals), "defense")
         .otherwise("other"),

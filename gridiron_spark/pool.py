@@ -5,7 +5,8 @@ Everything stays a lazy DataFrame until the caller acts. Partition columns
 (``season``, ``gameId``) are first-class via ``basePath`` discovery, so
 ``filter(season=...)`` / ``filter(gameId=...)`` prune whole directories before
 any I/O — the reference's glob scan only got this for gameId via the embedded
-column (SURVEY.md §4 partition-pruning note).
+column (SURVEY.md §4 partition-pruning note). :func:`scan_partitions` is the
+one reader of that layout.
 """
 
 from __future__ import annotations
@@ -16,9 +17,36 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gridiron_spark.sampling import sample_digest
+from gridiron_spark.ingest import write_partitions
+from gridiron_spark.sampling import sample_exact_n
 
 PLAY_KEY = ("gameId", "playId")
+
+
+def scan_partitions(spark: SparkSession, root: str, *paths: str) -> DataFrame:
+    """Lazy scan of a Hive-partitioned parquet tree with ``root`` as the
+    partition-discovery base, so every ``key=value`` level below it is a
+    column and filters on it prune directories. ``paths`` narrows the scan
+    to subtrees of ``root`` (default: the whole tree)."""
+    return spark.read.option("basePath", root).parquet(*(paths or (root,)))
+
+
+def compact_pool(
+    spark: SparkSession,
+    pool: str,
+    partition_cols: Sequence[str] = ("season", "gameId"),
+    sort_by: Sequence[str] = (),
+) -> DataFrame:
+    """Rewrite a partitioned lake so each Hive partition holds one file —
+    the small-file maintenance pass for lakes fragmented by appends
+    (streaming, concurrent writers). The reference keeps one file per game
+    by construction (src/ingest.py:82-87); this restores that invariant.
+    ``sort_by`` orders rows within each file for row-group skipping.
+    Returns the compacted lake's lazy scan."""
+    write_partitions(
+        scan_partitions(spark, pool), pool, partition_cols, sort_by=sort_by
+    )
+    return scan_partitions(spark, pool)
 
 
 class Pool:
@@ -39,7 +67,7 @@ class Pool:
         seasons' extra columns) and ``mergeSchema`` refuses outright on
         int-width conflicts (CANNOT_MERGE_SCHEMAS on Int16 vs Int32
         frameId)."""
-        return self.spark.read.option("basePath", self.path).parquet(self.path)
+        return scan_partitions(self.spark, self.path)
 
     # widening lattice for the dtypes the ingest schemas produce; families
     # that cannot widen numerically fall back to string (lossless render)
@@ -114,10 +142,8 @@ class Pool:
                 stacklevel=2,
             )
             return self.scan()
-        seasons = hive_dirs
         branches = [
-            self.spark.read.option("basePath", self.path).parquet(str(p))
-            for p in seasons
+            scan_partitions(self.spark, self.path, str(p)) for p in hive_dirs
         ]
         unified: dict[str, str] = {}
         for df in branches:
@@ -192,8 +218,7 @@ class Pool:
         pool = self.scan()
         for f in filters:
             pool = pool.filter(f)
-        keys = pool.select(*key_cols).distinct()
-        sampled = keys.orderBy(sample_digest(key_cols, seed), *key_cols).limit(n)
+        sampled = sample_exact_n(pool, key_cols, n, seed)
         full = self.scan()  # frames come from the unfiltered pool, like the reference
         return full.join(F.broadcast(sampled), on=list(key_cols), how="inner")
 

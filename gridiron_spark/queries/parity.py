@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from gridiron_spark.functions.decimal_safe import dec, dsum, dmean
 from gridiron_spark.io.tables import load_table
 from gridiron_spark.queries import register
-from gridiron_spark.sampling import sample_digest
+from gridiron_spark.sampling import sample_exact_n
 
 # ---------------------------------------------------------------------------
 # P1-P8: projection + conjunctive predicate filters (reference src/query.py:34-36,
@@ -160,14 +160,12 @@ GROUP BY l.l_orderkey
 def sample_join_back(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    keys = (
-        o.filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey")
-        .distinct()
+    sampled = sample_exact_n(
+        o.filter(F.col("o_orderpriority") == "1-URGENT"),
+        ["o_orderkey"],
+        _SAMPLE_N,
+        _SAMPLE_SEED,
     )
-    sampled = keys.orderBy(
-        sample_digest(["o_orderkey"], _SAMPLE_SEED), "o_orderkey"
-    ).limit(_SAMPLE_N)
     return (
         li.join(
             F.broadcast(sampled), li.l_orderkey == sampled.o_orderkey, "inner"

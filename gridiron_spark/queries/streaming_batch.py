@@ -637,9 +637,9 @@ _LATE_BEHIND_US = 600 * 1_000_000   # planted rows arrive ≥10 min behind max
 
 def _late_stage_key(sf_dir: str) -> str:
     """The late-arrival stage's fully-keyed path — the ONE place its
-    kind/params live, so tooling that must invalidate the stage (e.g.
-    scripts/probe_late_data.py --cold-stage) can never drift from the
-    entry's own key."""
+    kind/params live, so tooling that must invalidate the stage (e.g. the
+    cold-stage runs in BASELINE.md "Round-13 late-data loaded-box probe")
+    can never drift from the entry's own key."""
     from gridiron_spark.io.staging import stage_path
 
     return stage_path(
@@ -770,10 +770,10 @@ def streaming_late_data_e2e(spark, sf_dir):
 
     state_partitions=4 (not the drain default 32): this entry pays the
     per-trigger state-store fixed cost THREE times (maxFilesPerTrigger=1
-    semantics), and scripts/probe_late_data.py measured that cost
-    load-coupled — under a synthetic all-core load, 32 partitions x 3
-    triggers read 12-40 s (per-batch state commit sums to 23-93 s across
-    providers) while 4 partitions read 4.7-5.0 s with state commit at
+    semantics), and BASELINE.md "Round-13 late-data loaded-box probe"
+    records that cost load-coupled — under a synthetic all-core load, 32
+    partitions x 3 triggers read 12-40 s (per-batch state commit sums to
+    23-93 s across providers) while 4 partitions read 4.7-5.0 s with state commit at
     ~0.8 s. ~39k tiny state rows need no more than 4 stores; on a real
     cluster the knob is sized to load, which is precisely what
     run_available_now exposes. (This was the round-12 "driver-box

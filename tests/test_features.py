@@ -19,6 +19,7 @@ from gridiron_spark.operators.features import (
     play_summary,
     reindex_frames,
     side_predicates,
+    side_split,
 )
 from gridiron_spark.operators.tensorize import tensorize_plays
 from gridiron_spark.pool import Pool
@@ -55,6 +56,10 @@ def test_ball_rule_and_side_split(pool):
     preds = side_predicates()
     counts = {k: df.filter(p).count() for k, p in preds.items()}
     assert counts == {"ball": 50, "offense": 11 * 50, "defense": 11 * 50}
+    # side_split labels exactly the is_ball rows as the ball
+    split_ball = side_split(df).filter(F.col("side") == "ball").drop("side")
+    assert split_ball.exceptAll(df.filter(is_ball())).count() == 0
+    assert df.filter(is_ball()).exceptAll(split_ball).count() == 0
 
 
 def test_reindex_and_events_and_summary(pool):
@@ -109,3 +114,37 @@ def test_feature_store_roundtrip_join(pool, tmp_path, spark):
     assert "vx" in joined.columns
     n = joined.filter(F.col("vx").isNotNull()).count()
     assert n > 0
+
+
+def test_feature_store_rewrite_replaces_only_that_game(spark, tmp_path):
+    """Re-writing one game's features replaces exactly that game's
+    ``gameId=`` directory (one file) and leaves the other game untouched —
+    the lake's per-partition upsert, carried to the side-car sets."""
+    fs = FeatureStore(spark, tmp_path / "features")
+    root = tmp_path / "features" / "speed"
+    schema = "gameId long, playId int, frameId int, v double"
+    games = (2023090000, 2023090001)
+    rows = [(g, 1, f, float(f)) for g in games for f in range(1, 4)]
+    fs.write("speed", spark.createDataFrame(rows, schema))
+
+    def files(game):
+        d = root / "season=2023" / f"gameId={game}"
+        return {(p.name, p.stat().st_mtime_ns) for p in d.glob("*.parquet")}
+
+    before = {g: files(g) for g in games}
+    assert all(len(f) == 1 for f in before.values()), before
+
+    changed = [(games[0], 1, f, 10.0 * f) for f in range(1, 4)]
+    fs.write("speed", spark.createDataFrame(changed, schema))
+
+    assert files(games[1]) == before[games[1]]
+    after = files(games[0])
+    assert len(after) == 1 and after != before[games[0]]
+    got = sorted(
+        (r.gameId, r.frameId, r.v)
+        for r in fs.read("speed").select("gameId", "frameId", "v").collect()
+    )
+    assert got == sorted(
+        [(games[0], f, 10.0 * f) for f in range(1, 4)]
+        + [(games[1], f, float(f)) for f in range(1, 4)]
+    )

@@ -105,7 +105,7 @@ def test_compact_pool_restores_one_file_per_partition(spark, tmp_path):
     file per Hive partition with identical rows."""
     from pathlib import Path
 
-    from gridiron_spark.io.compact import compact_pool
+    from gridiron_spark.pool import compact_pool
 
     pool = str(tmp_path / "pool")
     base = spark.range(0, 300).selectExpr(

@@ -448,7 +448,7 @@ def test_minhash_sidecar_compaction_preserves_layout_and_flags(spark, tmp_path):
     replay contract depends on them) and leave the signature rows
     byte-identical, so a drain resumed after compaction sees the same
     state."""
-    from gridiron_spark.io.compact import compact_pool
+    from gridiron_spark.pool import compact_pool
     from gridiron_spark.streaming.pipelines import (
         _batch_parts,
         minhash_sidecar_dedup_available_now,
