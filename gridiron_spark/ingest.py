@@ -49,11 +49,11 @@ class IngestSummary:
     max_frame: int | None
 
 
-def derive_season(df: DataFrame, game_col: str = "gameId") -> DataFrame:
+def derive_season(df: DataFrame) -> DataFrame:
     """season := first 4 chars of gameId (reference src/ingest.py:73-74 —
     the partition key is computed from data, not stored in the source)."""
     return df.withColumn(
-        SEASON_COL, F.substring(F.col(game_col).cast("string"), 1, 4)
+        SEASON_COL, F.substring(F.col("gameId").cast("string"), 1, 4)
     )
 
 

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gridiron_spark.session import AQE_MIN_PARTITION_SIZE
+
 TABLES = (
     "region",
     "nation",
@@ -49,7 +51,6 @@ _tuned_sessions: "object" = None  # lazily-built weakref.WeakSet
 
 def _ensure_session_tuning(spark: SparkSession) -> None:
     global _tuned_sessions
-    import os
     import weakref
 
     if _tuned_sessions is None:
@@ -57,11 +58,10 @@ def _ensure_session_tuning(spark: SparkSession) -> None:
     if spark in _tuned_sessions:
         return
     _tuned_sessions.add(spark)
-    floor = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k")
     if _size_conf(spark, _AQE_MIN_PART, _AQE_MIN_PART_SPARK_DEFAULT) == (
         _AQE_MIN_PART_SPARK_DEFAULT
     ):
-        spark.conf.set(_AQE_MIN_PART, floor)
+        spark.conf.set(_AQE_MIN_PART, AQE_MIN_PARTITION_SIZE)
 
 # Raw parquet schema per (resolved sf_dir, table): plain metadata,
 # memoized so repeated load_table calls (a bench run issues thousands)
@@ -94,6 +94,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``ts_us`` (epoch microseconds, bigint — the canonical cross-engine form;
     DuckDB timestamps are µs so nanos are not oracle-representable) and
     ``ts_ts`` (TimestampType, µs precision) for window/streaming operators.
+
+    Side effect: the first call on a session whose AQE coalescing floor
+    (``spark.sql.adaptive.coalescePartitions.minPartitionSize``) is still
+    Spark's stock 1m sets it to ``SPARK_GRAFT_AQE_MIN_PARTITION_SIZE``
+    (default 64k), and it stays set for every later query on that session.
+    ``SPARK_GRAFT_AQE_MIN_PARTITION_SIZE=1048576`` keeps Spark's stock value.
     """
     _ensure_session_tuning(spark)
     if name == "events":
@@ -213,19 +219,16 @@ def _estimated_scan_partitions(
 # (OPTIMIZATION_r14.md): compressed bytes UNDER-represent per-row compute
 # — at 96 KB/task the text/embedding entries lost 1.5-3x (filter_funnel
 # 1.63→4.67 s at 7 tasks; dedup_embedding_cosine 0.80→1.38 at 9) because
-# their fan-out stages are compute-bound, not byte-bound, so the default
+# their fan-out stages are compute-bound, not byte-bound, so the target
 # is deliberately small: 20 KB/task keeps every sf0.1 table at full
 # cluster width (all measured r13 wins intact, probe-verified flat) and
 # only bounds genuinely tiny scans — the sub-100 KB inputs whose 32-way
 # round-robin paid more in task scheduling than the work itself (the
 # driver's 8-core bench beat its 32-core bench on exactly those stages).
-_FAN_OUT_TARGET_ENV = "SPARK_GRAFT_FAN_OUT_TARGET_BYTES"
-_FAN_OUT_TARGET_DEFAULT = 20 << 10
-
-_warned_fan_out_off = False
+_FAN_OUT_TARGET_BYTES = 20 << 10
 
 
-def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition a *pre-fan-out* input so a downstream explode
     parallelizes — only when the scan is under-partitioned, and only as
     wide as the input size justifies.
@@ -237,12 +240,12 @@ def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     costs one shuffle of the raw text bytes — tiny relative to the exploded
     output — and buys full-cluster parallelism for the generation stage.
 
-    Width = min(cluster parallelism, max(scan estimate, input bytes /
-    target)): a genuinely tiny input stops paying full-cluster scheduling
+    Width = min(defaultParallelism, max(scan estimate, input bytes /
+    20 KiB)): a genuinely tiny input stops paying full-cluster scheduling
     for kilobytes of work (the round-13 driver's 8-core bench BEAT its
     32-core bench on exactly these stages), while any input big enough to
     use the cluster still gets it — the target (see
-    ``_FAN_OUT_TARGET_DEFAULT``) is sized so the sf0.1 bench tables all
+    ``_FAN_OUT_TARGET_BYTES``) is sized so the sf0.1 bench tables all
     keep full width. The under-partitioned check is a
     plan-free file-size estimate (:func:`_estimated_scan_partitions`) — the
     previous ``df.rdd.getNumPartitions()`` probe forced an RDD conversion
@@ -251,33 +254,14 @@ def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     well above cluster parallelism, and non-local lakes (estimate
     unavailable) skip the repartition entirely.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_FAN_OUT") == "0":  # measurement toggle
-        global _warned_fan_out_off
-        if not _warned_fan_out_off:  # round-13 advice: never silently off
-            import sys
-
-            print(
-                "gridiron_spark: WARNING SPARK_GRAFT_FAN_OUT=0 — fan_out "
-                "disabled, heavy pre-exchange stages will run serially "
-                "(measurement toggle, not a production setting)",
-                file=sys.stderr,
-            )
-            _warned_fan_out_off = True
-        return df
-    if parallelism is None:
-        parallelism = df.sparkSession.sparkContext.defaultParallelism
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
     sizes = _scan_file_sizes(df)
     if sizes is None:
         return df
     est = _estimated_scan_partitions(df, sizes=sizes)
     if est is None or est >= parallelism:
         return df
-    target = int(
-        os.environ.get(_FAN_OUT_TARGET_ENV, str(_FAN_OUT_TARGET_DEFAULT))
-    )
-    width = min(parallelism, max(est, -(-sum(sizes) // max(target, 1))))
+    width = min(parallelism, max(est, -(-sum(sizes) // _FAN_OUT_TARGET_BYTES)))
     if width <= est:
         return df
     return df.repartition(width)

@@ -35,8 +35,9 @@ from pyspark.sql import functions as F
 SENTINEL = "¤"
 
 
-def word_freq(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, freq): the corpus→vocabulary collapse (lower, split on space).
+def word_freq(docs: DataFrame) -> DataFrame:
+    """(word, freq): the corpus→vocabulary collapse (lower, split ``text`` on
+    space).
     Map-side combined; the one corpus-sized aggregation of the whole loop.
     fan_out: split+explode+partial-agg are narrow, so a single-file scan
     would tokenize on ONE core (guide §2.4; no-op at scale)."""
@@ -44,7 +45,7 @@ def word_freq(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     return (
         fan_out(docs)
-        .select(F.explode(F.split(F.lower(text_col), " ")).alias("word"))
+        .select(F.explode(F.split(F.lower("text"), " ")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))

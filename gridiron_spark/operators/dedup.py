@@ -27,31 +27,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct word k-grams of lower(text); documents shorter than k words
+def word_shingles(text: Column) -> Column:
+    """Distinct word 3-grams of lower(text); documents shorter than 3 words
     contribute their whole text as a single shingle."""
     toks = F.split(F.lower(text), " ")
     grams = F.when(
-        F.size(toks) >= k,
+        F.size(toks) >= 3,
         F.transform(
-            F.sequence(F.lit(0), F.size(toks) - k),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
+            F.sequence(F.lit(0), F.size(toks) - 3),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
         ),
     ).otherwise(F.array(F.concat_ws(" ", toks)))
     return F.array_distinct(grams)
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """k-element MinHash signature: per hash i, the lexicographic min of
-    md5(shingle || '|i') over the shingle set."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s, i=i: F.md5(F.concat(s, F.lit(f"|{i}"))))
-            )
-            for i in range(num_hashes)
-        ]
-    )
 
 
 def band_keys(signature: Column, bands: int, rows: int) -> Column:
@@ -71,8 +58,6 @@ def jaccard(a: Column, b: Column) -> Column:
 
 def shingle_rows(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     distinct: bool = True,
 ) -> DataFrame:
@@ -100,8 +85,7 @@ def shingle_rows(
     from gridiron_spark.io.tables import fan_out
 
     toks = fan_out(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.lower(F.col(text_col)), " ").alias("toks"),
+        "doc_id", F.split(F.lower(F.col("text")), " ").alias("toks")
     )
     exploded = toks.filter(F.size("toks") >= k).select(
         "doc_id", F.posexplode("toks").alias("pos", "tok")
@@ -143,7 +127,7 @@ def minhash_signature_df(
     )
 
 
-def simhash_df(shingles: DataFrame, bits: int = 32) -> DataFrame:
+def simhash_df(shingles: DataFrame) -> DataFrame:
     """(doc_id, simhash bigint) via grouped per-bit vote sums — identical
     values to :func:`simhash32`, linear plan shape (one md5 per shingle, one
     shuffle), vs the scalar form's per-reference re-evaluation."""
@@ -152,11 +136,11 @@ def simhash_df(shingles: DataFrame, bits: int = 32) -> DataFrame:
         F.sum(
             F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"t{b}")
-        for b in range(bits)
+        for b in range(32)
     ]
     agg = shingles.groupBy("doc_id").agg(*votes)
     fp = None
-    for b in range(bits):
+    for b in range(32):
         term = F.when(F.col(f"t{b}") > 0, F.lit(1 << b).cast("bigint")).otherwise(
             F.lit(0).cast("bigint")
         )
@@ -254,8 +238,6 @@ def pair_intersection_counts(
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.7,
     num_hashes: int = 16,
     bands: int = 4,
@@ -267,7 +249,7 @@ def minhash_lsh_pairs(
     one LSH band whose true shingle-set Jaccard ≥ threshold, doc_a < doc_b.
     """
     rows = num_hashes // bands
-    sh = shingle_rows(docs, id_col, text_col, shingle_k)
+    sh = shingle_rows(docs, shingle_k)
     sig = minhash_signature_df(sh, num_hashes)
     banded = sig.select(
         "doc_id",
@@ -287,9 +269,9 @@ def minhash_lsh_pairs(
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    # exact verification restricted to the candidate pairs (a band collision
-    # with zero shared shingles has jaccard 0 — the inner count-join drops
-    # it, as the threshold would anyway)
+    # exact verification restricted to the candidate pairs: the set-form
+    # verifier scores every candidate, so a band collision with zero shared
+    # shingles comes back with jaccard 0 and the threshold drops it
     return (
         pair_intersection_counts(sh, candidates=cand)
         .filter(F.col("jaccard") >= threshold)
@@ -299,8 +281,6 @@ def minhash_lsh_pairs(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.7,
     shingle_k: int = 3,
 ) -> DataFrame:
@@ -311,14 +291,12 @@ def ngram_jaccard_pairs(
     join shuffles on the shingle value — the exact-recall counterpart to the
     MinHash candidate generator.
     """
-    sh = shingle_rows(docs, id_col, text_col, shingle_k)
+    sh = shingle_rows(docs, shingle_k)
     return pair_intersection_counts(sh).filter(F.col("jaccard") >= threshold)
 
 
 def prefix_filtered_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.7,
     shingle_k: int = 3,
     materialize: bool = True,
@@ -357,7 +335,7 @@ def prefix_filtered_pairs(
     """
     from pyspark.sql import Window
 
-    sh = shingle_rows(docs, id_col, text_col, shingle_k)
+    sh = shingle_rows(docs, shingle_k)
     if materialize:
         sh = sh.localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
@@ -420,14 +398,12 @@ def _pin(df: DataFrame, reliable: bool) -> DataFrame:
 
 def connected_components(
     pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 20,
     reliable_checkpoint: bool = False,
 ) -> DataFrame:
-    """(doc_id, cluster_id) for every node in the pair graph — min-label
-    propagation to a fixpoint. This is the *cluster assignment* step a dedup
-    pipeline needs after pair generation (keep one doc per cluster).
+    """(doc_id, cluster_id) for every node in the (doc_a, doc_b) pair graph
+    — min-label propagation to a fixpoint (at most 20 rounds). This is the
+    *cluster assignment* step a dedup pipeline needs after pair generation
+    (keep one doc per cluster).
 
     Iterative dataflow done Spark-style: each round is one join + one
     min-aggregate over the (bounded) frontier; convergence is detected by
@@ -443,9 +419,9 @@ def connected_components(
     # pair generation — measured 14s → 3s on the sf0.1 corpus). On a cluster
     # use reliable checkpoint(dir) so executor loss can't drop the state.
     edges = _pin(
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
         .distinct(),
         reliable_checkpoint,
@@ -456,7 +432,7 @@ def connected_components(
         .withColumn("label", F.col("node")),
         reliable_checkpoint,
     )
-    for _ in range(max_iter):
+    for _ in range(20):
         prop = (
             edges.join(labels, edges["src"] == labels["node"])
             .select(F.col("dst").alias("node"), "label")
@@ -482,12 +458,11 @@ def connected_components(
 
 def connected_components_star(
     pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
     max_iter: int = 20,
     reliable_checkpoint: bool = False,
 ) -> DataFrame:
-    """(doc_id, cluster_id) via alternating large-star/small-star rounds —
+    """(doc_id, cluster_id) for the (doc_a, doc_b) pair graph via
+    alternating large-star/small-star rounds —
     the O(log² n)-round connected-components algorithm (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14), the scale form
     of :func:`connected_components` with the identical fixpoint contract.
@@ -508,7 +483,7 @@ def connected_components_star(
     (reliable checkpoint(dir) on a real cluster).
     """
     edges = _pin(
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct(),
         reliable_checkpoint,
@@ -591,8 +566,8 @@ def connected_components_star(
     return labels.unionByName(roots)
 
 
-def simhash32(text: Column, shingle_k: int = 3) -> Column:
-    """32-bit SimHash over the word-shingle set, as a bigint.
+def simhash32(text: Column) -> Column:
+    """32-bit SimHash over the word 3-shingle set, as a bigint.
 
     Per shingle, a 32-bit hash is carved from the first 8 md5 hex chars
     (cross-engine: any SQL engine reproduces hex→int; an engine-private hash
@@ -606,7 +581,7 @@ def simhash32(text: Column, shingle_k: int = 3) -> Column:
     497 shingle-level), so k-gram features are required for the fingerprint
     to discriminate. Pure expression algebra — JVM-side, no UDFs.
     """
-    shingles = word_shingles(text, shingle_k)
+    shingles = word_shingles(text)
     hashes = F.transform(
         shingles, lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint")
     )
@@ -636,13 +611,11 @@ def hamming(a: Column, b: Column) -> Column:
 
 def simhash_near_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 3,
     bands: int = 4,
-    shingle_k: int = 3,
 ) -> DataFrame:
-    """Near-duplicate pairs by SimHash band-blocking + exact Hamming verify.
+    """Near-duplicate pairs by SimHash band-blocking + exact Hamming verify,
+    over word 3-shingles.
 
     The 32-bit fingerprint is split into ``bands`` contiguous bit-slices; only
     pairs sharing at least one identical slice are compared. With 4 bands of
@@ -653,9 +626,7 @@ def simhash_near_pairs(
     (band_idx, band_val): bounded bucket sizes, no O(n²) pass.
     """
     width = 32 // bands
-    fp = simhash_df(shingle_rows(docs, id_col, text_col, shingle_k)).withColumnRenamed(
-        "simhash", "fp"
-    )
+    fp = simhash_df(shingle_rows(docs)).withColumnRenamed("simhash", "fp")
     banded = fp.select(
         "doc_id",
         "fp",
@@ -699,34 +670,27 @@ def simhash_near_pairs(
 def incremental_minhash_flags(
     corpus_sig: DataFrame,
     batch_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """Incremental near-dup screening: a new batch against a corpus whose
     MinHash signatures are ALREADY materialized (side-car table, computed
     once at ingest) — the production shape that avoids re-shingling the
     whole lake for every arriving batch.
 
-    Only the batch is shingled and signed; the corpus contributes nothing
-    but its (doc_id, sig) rows. Candidates come from LSH band collisions
-    (batch×corpus plus earlier-batch×batch), and similarity is ESTIMATED
-    from the signatures themselves — matching-component fraction, a k/num_hashes
+    Only the batch is shingled (word 3-grams) and signed (16 hashes, 4
+    bands of 4); the corpus contributes nothing but its (doc_id, sig) rows.
+    Candidates come from LSH band collisions (batch×corpus plus
+    earlier-batch×batch), and similarity is ESTIMATED
+    from the signatures themselves — matching-component fraction, a k/16
     grid that is bit-exact cross-engine — so no corpus text is ever
     touched. Returns one row per batch doc: (doc_id, n_matches,
     min_partner, max_est); n_matches = 0 means keep.
 
-    Scale: corpus signatures are |corpus| × num_hashes md5 strings —
+    Scale: corpus signatures are |corpus| × 16 md5 strings —
     ~1000× smaller than text; the band join shuffles band keys only; the
     estimate join moves signatures for candidate pairs only.
     """
-    rows = num_hashes // bands
-    batch_sig = minhash_signature_df(
-        shingle_rows(batch_docs, id_col, text_col, shingle_k), num_hashes
-    )
+    batch_sig = minhash_signature_df(shingle_rows(batch_docs))
     all_sig = (
         corpus_sig.select("doc_id", "sig")
         .withColumn("is_batch", F.lit(False))
@@ -736,13 +700,13 @@ def incremental_minhash_flags(
             )
         )
     )
-    batch_ids = batch_docs.select(F.col(id_col).alias("doc_id"))
+    batch_ids = batch_docs.select("doc_id")
 
     def _banded(sig_df: DataFrame, extra: list[str]) -> DataFrame:
         return sig_df.select(
             "doc_id",
             *extra,
-            F.posexplode(band_keys(F.col("sig"), bands, rows)).alias(
+            F.posexplode(band_keys(F.col("sig"), 4, 4)).alias(
                 "band_idx", "band_key"
             ),
         )
@@ -778,7 +742,7 @@ def incremental_minhash_flags(
                     F.lit(0),
                     lambda acc, x: acc + x,
                 )
-                / F.lit(float(num_hashes))
+                / F.lit(16.0)
             ).alias("est_jaccard"),
         )
     )
@@ -805,8 +769,6 @@ def incremental_minhash_flags(
 def positional_grams(
     docs: DataFrame,
     k: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, pos, gram) — every k-token span WITH its 0-based start
     position (shingle_rows drops positions; substring-level dedup needs
@@ -819,8 +781,7 @@ def positional_grams(
     from gridiron_spark.io.tables import fan_out
 
     toks = fan_out(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.lower(F.col(text_col)), " ").alias("toks"),
+        "doc_id", F.split(F.lower(F.col("text")), " ").alias("toks")
     )
     exploded = toks.filter(F.size("toks") >= k).select(
         "doc_id", F.posexplode("toks").alias("pos", "tok")
@@ -911,11 +872,8 @@ def dup_span_coverage_stats(docs: DataFrame, k: int) -> DataFrame:
 
 def containment_prefix_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.8,
     shingle_k: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact shingle-set CONTAINMENT pairs: every ordered (contained,
     container) pair with |A∩B| / |A| ≥ threshold, A ≠ B.
@@ -937,15 +895,13 @@ def containment_prefix_pairs(
     as (tiny prefix count) × (full count) — linear in the full index, not
     quadratic in it.
 
-    ``materialize`` pins the exploded shingle rows once (lazy
-    localCheckpoint) for the ~5 references below — the same round-14
-    re-measured trade as :func:`prefix_filtered_pairs`.
+    The exploded shingle rows are pinned once (lazy localCheckpoint) for
+    the ~5 references below — the same round-14 re-measured trade as
+    :func:`prefix_filtered_pairs`.
     """
     from pyspark.sql import Window
 
-    sh = shingle_rows(docs, id_col, text_col, shingle_k)
-    if materialize:
-        sh = sh.localCheckpoint(eager=False)
+    sh = shingle_rows(docs, shingle_k).localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "shingle")

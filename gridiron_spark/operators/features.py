@@ -32,17 +32,16 @@ def is_ball(side_col: str = "team") -> Column:
     )
 
 
-def side_predicates(home_is_offense: bool = True) -> dict[str, Column]:
+def side_predicates() -> dict[str, Column]:
     """Offense/defense/ball split predicates (app/main.py:97-107 rules,
-    reusable engine-side instead of driver-side pandas)."""
+    reusable engine-side instead of driver-side pandas), reading the home
+    team as the offense."""
     ball = is_ball()
-    off_team = "home" if home_is_offense else "away"
-    def_team = "away" if home_is_offense else "home"
     side = F.lower(F.col("team"))
     return {
         "ball": ball,
-        "offense": ~ball & (side == off_team),
-        "defense": ~ball & (side == def_team),
+        "offense": ~ball & (side == "home"),
+        "defense": ~ball & (side == "away"),
     }
 
 
@@ -144,12 +143,13 @@ def play_summary(df: DataFrame) -> DataFrame:
     )
 
 
-def per_play_normalized(df: DataFrame, cols: tuple[str, ...] = ("x", "y")) -> DataFrame:
-    """Min-max normalize columns within each play (per-play normalization for
-    model inputs — window min/max, no shuffle beyond the play key)."""
+def per_play_normalized(df: DataFrame) -> DataFrame:
+    """Min-max normalize ``x`` and ``y`` within each play into ``x_norm`` and
+    ``y_norm`` (per-play normalization for model inputs — window min/max, no
+    shuffle beyond the play key)."""
     w = Window.partitionBy("gameId", "playId")
     out = df
-    for c in cols:
+    for c in ("x", "y"):
         mn, mx = F.min(c).over(w), F.max(c).over(w)
         out = out.withColumn(
             f"{c}_norm", F.when(mx > mn, (F.col(c) - mn) / (mx - mn))

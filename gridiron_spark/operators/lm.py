@@ -75,51 +75,44 @@ def _q10(x: float) -> int:
     return int(math.floor(x * 10.0))
 
 
-def unigram_nlp_table(
-    vocab: tuple[str, ...] = LM_VOCAB,
-    buckets: int = BUCKETS,
-    oov_nlp10: int = OOV_NLP10,
-) -> list[int]:
-    """Hashed unigram negative-log-prob table (deci-bits). A Zipf(1) prior
-    over the vocab: p(rank r) ∝ 1/r, so nlp(r) = log2(H) + log2(r) with
-    H the harmonic normalizer. Collisions take the MORE PROBABLE word's
-    cost (min nlp) — exactly how a hashed LM degrades."""
-    h = sum(1.0 / r for r in range(1, len(vocab) + 1))
-    tab = [oov_nlp10] * buckets
-    for i, w in enumerate(vocab):
-        b = feature_bucket_py(w) % buckets
+def unigram_nlp_table() -> list[int]:
+    """Hashed unigram negative-log-prob table (deci-bits) over ``LM_VOCAB``.
+    A Zipf(1) prior over the vocab: p(rank r) ∝ 1/r, so nlp(r) = log2(H) +
+    log2(r) with H the harmonic normalizer. Collisions take the MORE
+    PROBABLE word's cost (min nlp) — exactly how a hashed LM degrades."""
+    h = sum(1.0 / r for r in range(1, len(LM_VOCAB) + 1))
+    tab = [OOV_NLP10] * BUCKETS
+    for i, w in enumerate(LM_VOCAB):
+        b = feature_bucket_py(w) % BUCKETS
         nlp10 = _q10(math.log2(h) + math.log2(i + 1))
         tab[b] = min(tab[b], nlp10)
     return tab
 
 
-def dsir_logratio_table(
-    target: tuple[str, ...] = DSIR_TARGET,
-    raw: tuple[str, ...] = DSIR_RAW,
-    buckets: int = BUCKETS,
-) -> list[int]:
-    """λ[b] = qlog_target[b] − qlog_raw[b] in deci-bits. Each model is a
+def dsir_logratio_table() -> list[int]:
+    """λ[b] = qlog_target[b] − qlog_raw[b] in deci-bits, target
+    ``DSIR_TARGET`` and raw ``DSIR_RAW``. Each model is a
     uniform unigram over its vocab with an OOV floor; subtracting makes
     the shared OOV mass cancel to 0, so only distribution DIFFERENCES
     move a document's weight (the DSIR estimator's defining property)."""
     def qlogs(vocab: tuple[str, ...]) -> list[int]:
         inv = _q10(math.log2(len(vocab)))  # -log2 p, uniform over vocab
-        t = [OOV_NLP10] * buckets
+        t = [OOV_NLP10] * BUCKETS
         for w in vocab:
-            b = feature_bucket_py(w) % buckets
+            b = feature_bucket_py(w) % BUCKETS
             t[b] = min(t[b], inv)
         return t
 
-    qt, qr = qlogs(target), qlogs(raw)
+    qt, qr = qlogs(DSIR_TARGET), qlogs(DSIR_RAW)
     # λ = (−nlp_t) − (−nlp_r) = nlp_r − nlp_t
-    return [qr[b] - qt[b] for b in range(buckets)]
+    return [qr[b] - qt[b] for b in range(BUCKETS)]
 
 
-def _bucket(col: Column, buckets: int = BUCKETS) -> Column:
+def _bucket(col: Column) -> Column:
     """md5 feature hash → bucket id (the quality_model/countmin family).
     SQL mirror: CAST(('0x' || substring(md5(x),1,8)) AS BIGINT) % B."""
     return (
-        F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint") % buckets
+        F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint") % BUCKETS
     )
 
 

@@ -436,9 +436,9 @@ def sample_frames(media: DataFrame, every_n: int = 10) -> Column | DataFrame:
     )
 
 
-def wav_roundtrip_stats(ids: DataFrame, n_samples: int = 256) -> DataFrame:
-    """Codec-proving round-trip: synthesize a deterministic int16 PCM signal
-    per id (s_i = (id·31 + i·17) mod 65536 − 32768), PACK it into a real
+def wav_roundtrip_stats(ids: DataFrame) -> DataFrame:
+    """Codec-proving round-trip: synthesize a deterministic 256-sample int16
+    PCM signal per id (s_i = (id·31 + i·17) mod 65536 − 32768), PACK it into a real
     RIFF/WAVE container, decode it back through ``_decode_payload`` (the
     production codec boundary), and emit integer stats computed from the
     DECODED samples — energy (Σs²), zero crossings, min/max. Every stat is
@@ -458,7 +458,7 @@ def wav_roundtrip_stats(ids: DataFrame, n_samples: int = 256) -> DataFrame:
             out = []
             for raw_id in pdf["media_id"]:
                 mid = int(raw_id)
-                i = np.arange(n_samples, dtype=np.int64)
+                i = np.arange(256, dtype=np.int64)
                 s = (mid * 31 + i * 17) % 65536 - 32768
                 pcm = s.astype("<i2").tobytes()
                 fmt = struct.pack("<HHIIHH", 1, 1, 16000, 32000, 2, 16)
@@ -615,19 +615,6 @@ DHASH_W, DHASH_H = 18, 16     # decode geometry: 9x8 cells of 2x2 pixels
 DHASH_BASES = 50              # planted near-dup groups: base = id mod 50
 
 
-def _dhash_gray(mid: int, i: int) -> int:
-    """Deterministic test-image sample: md5-family pseudo-random per
-    (base, position) so distinct bases give uncorrelated hashes, plus a
-    sparse +128 perturbation on every 97th pixel for odd variants
-    (mid div 50 odd) — same-base docs are NEAR-duplicates (few-bit
-    Hamming), not exact ones. SQL mirror in queries/multimodal.py."""
-    base = mid % DHASH_BASES
-    g = int(hashlib.md5(f"{base}_{i}".encode()).hexdigest()[:2], 16)
-    if (mid // DHASH_BASES) % 2 == 1 and i % 97 == 0:
-        g += 128
-    return g % 256
-
-
 def image_dhash(ids: DataFrame) -> DataFrame:
     """Difference-hash (dHash) per image THROUGH the production decode
     boundary: the deterministic 18x16 gray image packs into a real P6 PPM
@@ -697,10 +684,10 @@ def image_dhash(ids: DataFrame) -> DataFrame:
 AUDIO_WIN = 64  # samples per analysis window
 
 
-def audio_energy_windows(ids: DataFrame, n_samples: int = 256) -> DataFrame:
+def audio_energy_windows(ids: DataFrame) -> DataFrame:
     """Windowed audio feature extraction THROUGH the real WAV codec
-    boundary — the VAD/loudness primitive: the deterministic int16 signal
-    (wav_roundtrip_stats' formula) packs into a real RIFF/WAVE container,
+    boundary — the VAD/loudness primitive: the deterministic 256-sample
+    int16 signal (wav_roundtrip_stats' formula) packs into a real RIFF/WAVE container,
     decodes via ``_decode_payload``, and each 64-sample window reduces to
     exact integer features — energy Σs², peak |s|, in-window zero
     crossings. 4 rows per clip, all BIGINT.
@@ -709,8 +696,6 @@ def audio_energy_windows(ids: DataFrame, n_samples: int = 256) -> DataFrame:
     reshape, so per-row cost is O(samples)."""
     import numpy as np
 
-    n_win = n_samples // AUDIO_WIN
-
     def _windows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import struct
 
@@ -718,7 +703,7 @@ def audio_energy_windows(ids: DataFrame, n_samples: int = 256) -> DataFrame:
             out = []
             for raw_id in pdf["media_id"]:
                 mid = int(raw_id)
-                i = np.arange(n_samples, dtype=np.int64)
+                i = np.arange(256, dtype=np.int64)
                 s = (mid * 31 + i * 17) % 65536 - 32768
                 pcm = s.astype("<i2").tobytes()
                 fmt = struct.pack("<HHIIHH", 1, 1, 16000, 32000, 2, 16)
@@ -730,11 +715,11 @@ def audio_energy_windows(ids: DataFrame, n_samples: int = 256) -> DataFrame:
                 wav = b"RIFF" + struct.pack("<I", len(chunks)) + chunks
                 d = _decode_payload("audio", wav)
                 dec = np.frombuffer(d["pcm"], dtype="<i2").astype(np.int64)
-                w = dec.reshape(n_win, AUDIO_WIN)
+                w = dec.reshape(256 // AUDIO_WIN, AUDIO_WIN)
                 energy = (w * w).sum(axis=1)
                 peak = np.abs(w).max(axis=1)
                 zc = ((w[:, :-1] * w[:, 1:]) < 0).sum(axis=1)
-                for wi in range(n_win):
+                for wi in range(len(w)):
                     out.append(
                         (mid, wi, int(energy[wi]), int(peak[wi]), int(zc[wi]))
                     )

@@ -58,18 +58,15 @@ def feature_bucket_py(feature: str) -> int:
     return int(hashlib.md5(feature.encode()).hexdigest()[:8], 16) % BUCKETS
 
 
-def model_weights(
-    positive: tuple[str, ...] = POSITIVE_WORDS,
-    negative: tuple[str, ...] = NEGATIVE_WORDS,
-    buckets: int = BUCKETS,
-) -> list[int]:
-    """The hashed weight vector: +1 per positive feature's bucket, -1 per
-    negative feature's bucket (collisions sum — exactly how a hashed
-    linear model behaves). Integer weights keep the score sum exact."""
-    w = [0] * buckets
-    for p in positive:
+def model_weights() -> list[int]:
+    """The hashed weight vector: +1 per ``POSITIVE_WORDS`` feature's bucket,
+    -1 per ``NEGATIVE_WORDS`` feature's bucket (collisions sum — exactly how
+    a hashed linear model behaves). Integer weights keep the score sum
+    exact."""
+    w = [0] * BUCKETS
+    for p in POSITIVE_WORDS:
         w[feature_bucket_py(p)] += 1
-    for n in negative:
+    for n in NEGATIVE_WORDS:
         w[feature_bucket_py(n)] -= 1
     return w
 
@@ -124,20 +121,19 @@ def tokens_expr(text_col: str = "text") -> Column:
 def score_documents(
     docs: DataFrame,
     weights: list[int] | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """The inference pass: (doc_id, n_feats, score_sum, margin, keep).
+    """The inference pass over ``text``: (doc_id, n_feats, score_sum,
+    margin, keep).
 
     ``score_sum`` = Σ weights[bucket(feature)] over words + bigrams
     (exact BIGINT), ``margin`` = score_sum / n_feats (one IEEE division;
     0.0 for featureless docs), ``keep`` = margin > 0. Pure Column
     algebra over one projection of the corpus scan — no UDF, no shuffle.
     """
-    with_toks = docs.select(id_col, tokens_expr(text_col).alias("toks"))
+    with_toks = docs.select("doc_id", tokens_expr().alias("toks"))
     feats = feature_array(F.col("toks"))
     scored = with_toks.select(
-        id_col,
+        "doc_id",
         F.size(feats).cast("bigint").alias("n_feats"),
         score_sum_expr(feats, weights).alias("score_sum"),
     )
@@ -145,7 +141,7 @@ def score_documents(
         F.col("score_sum").cast("double") / F.col("n_feats")
     )
     return scored.select(
-        id_col,
+        "doc_id",
         "n_feats",
         "score_sum",
         margin.alias("margin"),
@@ -153,7 +149,6 @@ def score_documents(
     )
 
 
-def weights_sql_literal(weights: list[int] | None = None) -> str:
+def weights_sql_literal() -> str:
     """The weight vector as a DuckDB list literal, for oracle strings."""
-    w = weights if weights is not None else model_weights()
-    return "[" + ", ".join(str(x) for x in w) + "]"
+    return "[" + ", ".join(str(x) for x in model_weights()) + "]"

@@ -60,8 +60,6 @@ def srp_bucket(vec: Column, signs: list[list[float]]) -> Column:
 
 def embedding_near_pairs(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.4,
     planes: int = 4,
     dims: int = 64,
@@ -81,10 +79,10 @@ def embedding_near_pairs(
     # over the scan — single-file scans would hash on ONE core (guide §2.4).
     emb = fan_out(emb)
     bucketed = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        srp_bucket(F.col(vec_col), signs).alias("bucket"),
-        norm2(F.col(vec_col)).alias("nrm"),
+        "vec_id",
+        F.col("embedding").alias("v"),
+        srp_bucket(F.col("embedding"), signs).alias("bucket"),
+        norm2(F.col("embedding")).alias("nrm"),
     )
     cand = (
         bucketed.alias("a")
@@ -110,8 +108,6 @@ def ivf_topk(
     k: int = 10,
     centroid_stride: int = 50,
     n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-style approximate top-k: coarse quantize, probe the nearest lists.
 
@@ -129,21 +125,21 @@ def ivf_topk(
     """
     from pyspark.sql import Window
 
-    cents = emb.filter(F.col(id_col) % centroid_stride == 0).select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("cvec"),
-        norm2(F.col(vec_col)).alias("cnrm"),
+    cents = emb.filter(F.col("vec_id") % centroid_stride == 0).select(
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("cvec"),
+        norm2(F.col("embedding")).alias("cnrm"),
     )
-    q = emb.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qvec")
+    q = emb.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("qvec")
     )
     # norms per vector/centroid, not per (vector, centroid) pair — the
     # assignment pass is n × centroids cosines, its one optimizable constant.
     # fan_out: that n×C fan-out is narrow over the scan (guide §2.4).
     pairs = fan_out(emb).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        norm2(F.col(vec_col)).alias("vnrm"),
+        "vec_id",
+        F.col("embedding").alias("v"),
+        norm2(F.col("embedding")).alias("vnrm"),
     ).join(F.broadcast(cents))
     pair_cos = dot(F.col("v"), F.col("cvec")) / (F.col("vnrm") * F.col("cnrm"))
     rn = F.row_number().over(
@@ -198,9 +194,7 @@ def l2_sq(a: Column, b: Column) -> Column:
     return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def lloyd_assign(
-    emb: DataFrame, centroids: DataFrame, id_col: str = "vec_id"
-) -> DataFrame:
+def lloyd_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     """One Lloyd assignment step: each vector to its nearest centroid
     (squared L2; ties break to the smaller cluster id).
 
@@ -215,12 +209,12 @@ def lloyd_assign(
     # single-file scan would compute every distance on ONE core (§2.4);
     # no-op on well-partitioned or non-stat-able inputs.
     d = fan_out(emb).crossJoin(F.broadcast(centroids)).select(
-        id_col,
+        "vec_id",
         "embedding",
         "cluster",
         l2_sq(F.col("embedding"), F.col("cvec")).alias("dist2"),
     )
-    w = Window.partitionBy(id_col).orderBy("dist2", "cluster")
+    w = Window.partitionBy("vec_id").orderBy("dist2", "cluster")
     return (
         d.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
@@ -308,11 +302,11 @@ def quantized_lloyd_update(
     )
 
 
-def seed_centroids(emb: DataFrame, k: int, id_col: str = "vec_id") -> DataFrame:
+def seed_centroids(emb: DataFrame, k: int) -> DataFrame:
     """Deterministic seeds: the first ``k`` vectors, elements widened to
     double so seeds and updated centroids share one type."""
-    return emb.filter(F.col(id_col) < k).select(
-        F.col(id_col).alias("cluster"),
+    return emb.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cluster"),
         F.transform("embedding", lambda x: x.cast("double")).alias("cvec"),
     )
 
@@ -321,7 +315,6 @@ def kmeans_fit(
     emb: DataFrame,
     k: int = 8,
     rounds: int = 4,
-    id_col: str = "vec_id",
     two_level_groups: int | None = None,
     probes: int = 2,
 ) -> DataFrame:
@@ -346,7 +339,7 @@ def kmeans_fit(
     connected_components. Cost is rounds × one corpus pass — no
     corpus-sized state on the driver, ever (the fingerprint is 1 row).
     """
-    cents = seed_centroids(emb, k, id_col)
+    cents = seed_centroids(emb, k)
     prev_fp = None
     for _ in range(rounds):
         if two_level_groups is not None:
@@ -354,15 +347,14 @@ def kmeans_fit(
             # (coarse-then-fine; see two_level_assign) — the training-side
             # twin of the semdedup_two_level assignment
             assigned = two_level_assign(
-                emb, cents, groups=two_level_groups, probes=probes,
-                id_col=id_col,
+                emb, cents, groups=two_level_groups, probes=probes
             ).localCheckpoint(eager=False)
         else:
-            assigned = lloyd_assign(emb, cents, id_col).localCheckpoint(
+            assigned = lloyd_assign(emb, cents).localCheckpoint(
                 eager=False
             )
         fp = assigned.agg(
-            F.bit_xor(F.xxhash64(id_col, "cluster")).alias("fp")
+            F.bit_xor(F.xxhash64("vec_id", "cluster")).alias("fp")
         ).collect()[0]["fp"]
         if fp == prev_fp:
             break
@@ -378,7 +370,6 @@ def two_level_assign(
     centroids: DataFrame,
     groups: int,
     probes: int = 2,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Coarse-then-fine Lloyd assignment — the scaled-k regime's answer
     to the n×k distance fan-out (the ann_ivf_topk probe pattern applied
@@ -449,27 +440,27 @@ def two_level_assign(
     )
     # level 1: probe the `probes` nearest branches per vector
     # (fan_out: the ×g fan-out is narrow over the scan, guide §2.4)
-    pw = Window.partitionBy(id_col).orderBy("gdist2", "grp")
+    pw = Window.partitionBy("vec_id").orderBy("gdist2", "grp")
     probed = (
         fan_out(emb).crossJoin(F.broadcast(sup))
         .select(
-            id_col,
+            "vec_id",
             "embedding",
             "grp",
             l2_sq(F.col("embedding"), F.col("gvec")).alias("gdist2"),
         )
         .withColumn("rn", F.row_number().over(pw))
         .filter(F.col("rn") <= probes)
-        .select(id_col, "embedding", "grp")
+        .select("vec_id", "embedding", "grp")
     )
     # exact argmin within the probed branches only
-    aw = Window.partitionBy(id_col).orderBy("dist2", "cluster")
+    aw = Window.partitionBy("vec_id").orderBy("dist2", "cluster")
     return (
         probed.join(
             F.broadcast(cmem.select("grp", "cluster", "cvec")), "grp"
         )
         .select(
-            id_col,
+            "vec_id",
             "embedding",
             "cluster",
             l2_sq(F.col("embedding"), F.col("cvec")).alias("dist2"),
@@ -484,7 +475,6 @@ def semdedup_flags(
     emb: DataFrame,
     centroids: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
     assign: DataFrame | None = None,
     prune_rank_window: int | None = None,
     exact_cap: int | None = None,
@@ -544,7 +534,7 @@ def semdedup_flags(
     # "cluster assignment" artifact a real curation pipeline would persist
     # anyway).
     if assign is None:
-        assign = lloyd_assign(emb, centroids, id_col)
+        assign = lloyd_assign(emb, centroids)
     a = assign.localCheckpoint(eager=False)
     if prune_rank_window is None and exact_cap is not None:
         max_cluster = a.groupBy("cluster").count().agg(
@@ -556,7 +546,7 @@ def semdedup_flags(
     if prune_rank_window is not None:
         from pyspark.sql import Window
 
-        w = Window.partitionBy("cluster").orderBy("dist2", id_col)
+        w = Window.partitionBy("cluster").orderBy("dist2", "vec_id")
         left = (
             a.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= prune_rank_window)
@@ -568,14 +558,14 @@ def semdedup_flags(
     # stage pays 1 array fold per pair instead of 3 (guide §2.3; round 13)
     left = left.select(
         "cluster",
-        F.col(id_col).alias("va"),
+        F.col("vec_id").alias("va"),
         F.col("dist2").alias("da"),
         F.col("embedding").alias("ea"),
         norm2(F.col("embedding")).alias("na"),
     )
     right = a.select(
         "cluster",
-        F.col(id_col).alias("vb"),
+        F.col("vec_id").alias("vb"),
         F.col("dist2").alias("db"),
         F.col("embedding").alias("eb"),
         norm2(F.col("embedding")).alias("nb"),
@@ -588,13 +578,13 @@ def semdedup_flags(
         left.join(right, "cluster")
         .filter(ranked_before)
         .filter(pair_cos >= F.lit(threshold))
-        .select(F.col("vb").alias(id_col))
+        .select(F.col("vb").alias("vec_id"))
         .distinct()
     )
     return (
-        a.join(dropped.withColumn("_dropped", F.lit(1)), id_col, "left")
+        a.join(dropped.withColumn("_dropped", F.lit(1)), "vec_id", "left")
         .select(
-            id_col,
+            "vec_id",
             "cluster",
             F.when(F.col("_dropped").isNull(), 1)
             .otherwise(0)

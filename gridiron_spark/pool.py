@@ -205,7 +205,6 @@ class Pool:
         n: int,
         filters: Iterable[Column] = (),
         seed: int = 42,
-        key_cols: Sequence[str] = PLAY_KEY,
     ) -> DataFrame:
         """Exactly-n seeded random plays, with all their frames.
 
@@ -218,9 +217,9 @@ class Pool:
         pool = self.scan()
         for f in filters:
             pool = pool.filter(f)
-        sampled = sample_exact_n(pool, key_cols, n, seed)
+        sampled = sample_exact_n(pool, PLAY_KEY, n, seed)
         full = self.scan()  # frames come from the unfiltered pool, like the reference
-        return full.join(F.broadcast(sampled), on=list(key_cols), how="inner")
+        return full.join(F.broadcast(sampled), on=list(PLAY_KEY), how="inner")
 
     # -- sinks (src/export.py) -------------------------------------------------
 
@@ -229,13 +228,13 @@ class Pool:
         df: DataFrame,
         out_dir: str | Path,
         single_file: bool = False,
-        order_by: Sequence[str] = ("gameId", "playId", "frameId", "nflId"),
     ) -> None:
         """Canonically-ordered CSV dump (reference src/export.py + the
         sampler's sort contract, scripts/random_plays_sampler.py:96).
         ``single_file`` coalesces to one part — only for fixture-sized data."""
         out = df
-        present = [c for c in order_by if c in df.columns]
+        key = ("gameId", "playId", "frameId", "nflId")
+        present = [c for c in key if c in df.columns]
         if present:
             out = out.orderBy(*present)
         if single_file:

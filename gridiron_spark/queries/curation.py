@@ -123,8 +123,11 @@ _PAIRS_SCHEMA = (
 def _mine_candidate_pairs(spark, sf_dir):
     """(doc_a, doc_b, est_jaccard, jaccard) for every LSH candidate pair —
     the production MinHash config (16 hashes, 4 bands of 4), exact Jaccard
-    via the count-based verifier. Signatures join back by doc_id, so nothing
-    is recomputed per pair."""
+    via the set-form verifier (``pair_intersection_counts`` with
+    candidates). Signatures join back by doc_id, so nothing is recomputed
+    per pair. This miner applies no threshold, so a candidate sharing no
+    shingle (an md5 band collision — cryptographically negligible) would
+    be kept with jaccard 0."""
     from gridiron_spark.operators.dedup import (
         band_keys,
         minhash_signature_df,

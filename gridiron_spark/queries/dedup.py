@@ -31,7 +31,7 @@ from gridiron_spark.queries import register
 # engines, so even the *approximate* operators hash-match the oracle.
 # ---------------------------------------------------------------------------
 
-# word_shingles(text, k=3): distinct word 3-grams; <3-word docs contribute
+# word_shingles(text): distinct word 3-grams; <3-word docs contribute
 # their whole text. range(0, n-2) (exclusive) == Spark sequence(0, n-3)
 # (inclusive): both emit n-2 shingles.
 _SHINGLES_CTE = """

@@ -1305,7 +1305,7 @@ def data_quality_contract(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     ev = load_table(spark, sf_dir, "events")
 
-    def _check(name, df, bad, total=None):
+    def _check(name, df, bad):
         return df.agg(
             F.count(F.when(bad, F.lit(1))).cast("bigint").alias("n_bad"),
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),

@@ -3460,8 +3460,7 @@ SELECT src, dst, dot FROM (
 ) WHERE rk <= {_GIVF_K}
 """,
 )
-def knn_graph_cellsplit_probe(spark, sf_dir, cap=_SPLIT_CAP,
-                              probes=_SPLIT_PROBES):
+def knn_graph_cellsplit_probe(spark, sf_dir):
     """`knn_graph_cellsplit` with the sibling-probe recall knob SHIPPED —
     the round-11 docstring's "probe sibling sub-cells" option, measured
     instead of promised: each hot-cell member probes its top-{p}
@@ -3484,7 +3483,8 @@ def knn_graph_cellsplit_probe(spark, sf_dir, cap=_SPLIT_CAP,
     probe buys +0.10 recall for +7% budget while a third buys +0.08
     for another +7%; at fixed cap each probe step is near-linear in
     both axes, so probe width is the fine-grained recall knob (no
-    re-index), cap sets the floor.
+    re-index), cap sets the floor. This entry runs at that point
+    (``_SPLIT_CAP``, ``_SPLIT_PROBES``).
 
     Scale shape: identical to knn_graph_cellsplit except the source
     side of the candidate equi-join carries ≤ {p} rows per hot-cell
@@ -3492,7 +3492,9 @@ def knn_graph_cellsplit_probe(spark, sf_dir, cap=_SPLIT_CAP,
     WindowGroupLimit rank); the top-{k} per source is unchanged."""
     from pyspark.sql import Window
 
-    q, remap = _cell_split_assign(spark, sf_dir, cap=cap, probes=probes)
+    q, remap = _cell_split_assign(
+        spark, sf_dir, cap=_SPLIT_CAP, probes=_SPLIT_PROBES
+    )
     # both sides of the candidate join read the remap — pin it once
     a = remap.localCheckpoint(eager=False)
     home = a.filter(F.col("home"))
@@ -3755,8 +3757,7 @@ def recursive_cell_split(spark, sf_dir, cap=_SPLIT_CAP, max_rounds=4):
     return cur.select("vec_id", "cid", "ck")
 
 
-def knn_graph_recursive_edges(spark, sf_dir, cap=_SPLIT_CAP, max_rounds=2,
-                              k=_GIVF_K):
+def knn_graph_recursive_edges(spark, sf_dir, cap=_SPLIT_CAP, max_rounds=2):
     """Corpus k-NN graph whose candidate self-join keys on the RECURSIVE
     post-split map (cid, ck) — the knn_graph_cellsplit shape riding
     `recursive_cell_split` instead of the one-round `_cell_split_assign`,
@@ -3800,7 +3801,7 @@ def knn_graph_recursive_edges(spark, sf_dir, cap=_SPLIT_CAP, max_rounds=2,
     wk = Window.partitionBy("src").orderBy(F.desc("dot"), F.asc("dst"))
     return (
         scored.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= _GIVF_K)
         .select("src", "dst", "dot")
     )
 

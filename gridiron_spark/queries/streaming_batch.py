@@ -226,36 +226,36 @@ def _stage_documents(spark, sf_dir) -> str:
     )
 
 
-def _stage_documents_sharded(spark, sf_dir, shards: int = 4) -> str:
-    """Documents staged as ``shards`` separate parquet files so a
+def _stage_documents_sharded(spark, sf_dir) -> str:
+    """Documents staged as 4 separate parquet files so a
     maxFilesPerTrigger=1 drain genuinely runs one micro-batch per shard
     (the small-SF stages otherwise collapse to a single file and the
     multi-batch merge path never executes). Range-partitioned on doc_id:
     ``repartition(n, expr)`` HASHES the expression, which collides
-    residues into the same partition (shards=4 measured 3 non-empty
+    residues into the same partition (4 shards measured 3 non-empty
     files), while range boundaries over a non-degenerate id column give
-    exactly ``shards`` non-empty contiguous files. Consumers must be
+    exactly 4 non-empty contiguous files. Consumers must be
     batching-independent anyway (that is the property their oracles
     pin)."""
     from gridiron_spark.io.staging import ensure_stage, stage_path
 
-    stage = stage_path(sf_dir, f"stream_docs_sharded{shards}_v2", "documents")
+    stage = stage_path(sf_dir, "stream_docs_sharded4_v2", "documents")
     return ensure_stage(
         stage,
         lambda p: load_table(spark, sf_dir, "documents")
-        .repartitionByRange(shards, F.col("doc_id"))
+        .repartitionByRange(4, F.col("doc_id"))
         .write.mode("overwrite")
         .parquet(p),
     )
 
 
 def _stage_documents_mod_sharded(
-    spark, sf_dir, shards: int = 4, max_doc_id: int | None = None
+    spark, sf_dir, max_doc_id: int | None = None
 ) -> str:
-    """Documents staged as ``shards`` single-file parquet shards by
-    ``doc_id % shards`` with strictly ascending mtimes — so the file
+    """Documents staged as 4 single-file parquet shards by
+    ``doc_id % 4`` with strictly ascending mtimes — so the file
     source serves shard 0, then 1, ... and micro-batch ``b`` contains
-    EXACTLY the docs with doc_id % shards == b. Unlike the
+    EXACTLY the docs with doc_id % 4 == b. Unlike the
     range-partitioned stage (whose boundaries come from Spark's
     sampling-based range exchange), this composition is a pure
     function of the data, so an ANSI-SQL oracle can replay
@@ -269,7 +269,7 @@ def _stage_documents_mod_sharded(
     from gridiron_spark.io.staging import ensure_stage, stage_path
 
     stage = stage_path(
-        sf_dir, f"stream_docs_modshard{shards}_v1", "documents",
+        sf_dir, "stream_docs_modshard4_v1", "documents",
         params={"max_doc_id": max_doc_id},
     )
 
@@ -281,16 +281,16 @@ def _stage_documents_mod_sharded(
             # cost flat across scale factors
             docs = docs.filter(F.col("doc_id") < max_doc_id)
         sides = f"{dst}/.sides"
-        for s in range(shards):
-            docs.filter(F.col("doc_id") % shards == s).coalesce(1).write.mode(
+        for s in range(4):
+            docs.filter(F.col("doc_id") % 4 == s).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(f"{sides}/{s}")
         now = int(os.stat(dst).st_mtime)
-        for s in range(shards):
+        for s in range(4):
             (part,) = glob.glob(f"{sides}/{s}/part-*.parquet")
             out = f"{dst}/shard{s}.parquet"
             shutil.copyfile(part, out)
-            mtime = now - 60 * (shards - s)
+            mtime = now - 60 * (4 - s)
             os.utime(out, (mtime, mtime))
         shutil.rmtree(sides, ignore_errors=True)
         open(f"{dst}/_SUCCESS", "w").close()

@@ -13,6 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Floor for AQE's byte-based partition coalescing (deployment tuning; see
+# get_spark below). io.tables applies it to sessions built elsewhere.
+AQE_MIN_PARTITION_SIZE = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k")
+
 
 def get_spark(
     app_name: str = "gridiron_spark",
@@ -50,7 +54,7 @@ def get_spark(
         # 4.9 → 7.0 s); 64k keeps both near their best.
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
+            AQE_MIN_PARTITION_SIZE,
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow for any pandas-UDF boundary (10-100x over row-at-a-time).

@@ -79,16 +79,12 @@ def tumbling_agg(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Sliding-window event counts (each row lands in window/slide buckets)."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Sliding-window event counts: 10-minute windows every 5 minutes (each
+    row lands in 2 buckets), 10-minute watermark."""
     return (
-        events.withWatermark("ts_ts", watermark)
-        .groupBy(F.window("ts_ts", window, slide).alias("w"), "event_type")
+        events.withWatermark("ts_ts", "10 minutes")
+        .groupBy(F.window("ts_ts", "10 minutes", "5 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
             F.col("w.start").cast("long").alias("window_start"),
@@ -99,14 +95,13 @@ def sliding_counts(
     )
 
 
-def session_agg(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Per-user session windows (30-min inactivity gap) — the streaming form
-    of the batch gaps-and-islands query (queries/streaming_batch.py)."""
+def session_agg(events: DataFrame) -> DataFrame:
+    """Per-user session windows (30-min inactivity gap, 10-minute watermark)
+    — the streaming form of the batch gaps-and-islands query
+    (queries/streaming_batch.py)."""
     return (
-        events.withWatermark("ts_ts", watermark)
-        .groupBy(F.session_window("ts_ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts_ts", "10 minutes")
+        .groupBy(F.session_window("ts_ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
         .select(
             F.col("w.start").cast("long").alias("session_start"),
@@ -244,40 +239,37 @@ def tws_user_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def attribution_join(
-    views: DataFrame, clicks: DataFrame, horizon: str = "24 hours",
-    watermark: str = "35 days",
-) -> DataFrame:
+def attribution_join(views: DataFrame, clicks: DataFrame) -> DataFrame:
     """Stream-stream inner join: each click attributed to every prior view by
-    the same user within ``horizon`` (the classic ad-attribution shape).
+    the same user within 24 hours (the classic ad-attribution shape).
 
     Both sides carry watermarks plus a two-sided event-time range condition —
     the combination is what lets Spark evict join state: a buffered view can
-    be dropped once the click watermark passes ``view_ts + horizon``. Without
-    the time bound, stream-stream join state grows forever.
+    be dropped once the click watermark passes ``view_ts + 24 hours``.
+    Without the time bound, stream-stream join state grows forever.
 
-    ``watermark`` is the *disorder bound*, not the horizon: for a live tail
-    it is the late-data SLA (minutes); for a backfill over unordered
-    historical files it must cover the corpus's time span, because the
-    watermark advances between micro-batches and files arrive in no
-    particular time order — an old-file row behind the watermark would be
-    silently dropped. The default is sized for the synthetic corpus's
-    one-month span; production backfills should sort file batches by time or
-    keep this at the corpus span.
+    The 35-day watermark is the *disorder bound*, not the horizon: for a
+    live tail it is the late-data SLA (minutes); for a backfill over
+    unordered historical files it must cover the corpus's time span,
+    because the watermark advances between micro-batches and files arrive
+    in no particular time order — an old-file row behind the watermark
+    would be silently dropped. 35 days covers the synthetic corpus's
+    one-month span; production backfills should sort file batches by time
+    or keep the watermark at the corpus span.
     """
     v = views.select(
         F.col("user_id").alias("v_user"),
         F.col("event_id").alias("view_id"),
         F.col("ts_ts").alias("view_ts"),
-    ).withWatermark("view_ts", watermark)
+    ).withWatermark("view_ts", "35 days")
     c = clicks.select(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
         F.col("ts_ts").alias("click_ts"),
-    ).withWatermark("click_ts", watermark)
+    ).withWatermark("click_ts", "35 days")
     cond = F.expr(
-        f"v_user = c_user AND click_ts >= view_ts "
-        f"AND click_ts <= view_ts + interval {horizon}"
+        "v_user = c_user AND click_ts >= view_ts "
+        "AND click_ts <= view_ts + interval 24 hours"
     )
     return v.join(c, cond, "inner").select(
         F.col("v_user").alias("user_id"),
@@ -340,14 +332,10 @@ def run_available_now(
     return spark.table(query_name)
 
 
-def enrich_with_dim(
-    events: DataFrame,
-    dim: DataFrame,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def enrich_with_dim(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static enrichment: join the stream to a (broadcast) dimension,
-    then a watermarked tumbling aggregation per dimension attribute.
+    then a 5-minute tumbling aggregation per dimension attribute under a
+    10-minute watermark.
 
     The static side is re-resolved per micro-batch (Spark re-plans the join
     each trigger), needs no watermark, and holds no join state — the
@@ -356,8 +344,8 @@ def enrich_with_dim(
     """
     enriched = events.join(F.broadcast(dim), events["user_id"] == dim["join_key"])
     return (
-        enriched.withWatermark("ts_ts", watermark)
-        .groupBy(F.window("ts_ts", window).alias("w"), "segment")
+        enriched.withWatermark("ts_ts", "10 minutes")
+        .groupBy(F.window("ts_ts", "5 minutes").alias("w"), "segment")
         .agg(F.count(F.lit(1)).alias("n"), dsum("value", "sum_value"))
         .select(
             F.col("w.start").cast("long").alias("window_start"),
@@ -425,17 +413,16 @@ def stream_documents(
     return reader.parquet(source_dir)
 
 
-def quality_gate_agg(docs: DataFrame, min_tokens: int = 40,
-                     min_distinct_frac: float = 0.35) -> DataFrame:
+def quality_gate_agg(docs: DataFrame) -> DataFrame:
     """Per-source admission stats for a streaming quality gate: the gate
-    itself (token count + lexical diversity) is STATELESS — pure per-row
-    Column math inside each micro-batch — and the only state is the
-    per-source aggregate (|sources| rows). Token sums are integers, so the
+    itself (≥ 40 tokens, ≥ 0.35 distinct-token fraction) is STATELESS —
+    pure per-row Column math inside each micro-batch — and the only state
+    is the per-source aggregate (|sources| rows). Token sums are integers, so the
     streaming result is bit-identical to batch backfill."""
     toks = F.split(F.lower("text"), " ")
     n_tokens = F.size(toks)
     distinct_frac = F.size(F.array_distinct(toks)) / n_tokens
-    keep = (n_tokens >= min_tokens) & (distinct_frac >= min_distinct_frac)
+    keep = (n_tokens >= 40) & (distinct_frac >= 0.35)
     return (
         docs.select("source", n_tokens.alias("n_tokens"), keep.alias("keep"))
         .groupBy("source")
@@ -633,11 +620,9 @@ def _batch_parts(
     return [p for _, p in sorted(out)]
 
 
-def _fold_root(
-    spark: SparkSession, root: str, upto: int | None, bucketed: bool
-) -> int:
-    """Fold the ``batch=<id>`` dirs of one side-car root with id < upto
-    into the single dir ``batch=<max folded id>``. Returns the number of
+def _fold_root(spark: SparkSession, root: str, bucketed: bool) -> int:
+    """Fold the ``batch=<id>`` dirs of one side-car root into the single
+    dir ``batch=<max folded id>``. Returns the number of
     dirs retired (0 = nothing to fold). See fold_sidecar_state."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path
@@ -649,10 +634,7 @@ def _fold_root(
     for p in incomplete_tmps:
         fs.delete(p, True)
     _publish_pending_folds(fs, hpath, base, ids, complete_tmps)
-    if not ids:
-        return 0
-    w = upto if upto is not None else max(ids) + 1
-    fold = sorted(b for b in ids if b < w)
+    fold = sorted(ids)
     if len(fold) < 2:
         return 0
     target = fold[-1]
@@ -693,12 +675,10 @@ def fold_sidecar_state(
     spark: SparkSession,
     sig_dir: str,
     flags_dir: str,
-    upto: int | None = None,
 ) -> int:
     """Compact the side-car's per-batch state: fold every committed
-    ``batch=<id>`` dir with id < ``upto`` (default: all of them) into the
-    single dir ``batch=<max folded id>`` per root — the maintenance pass
-    that bounds `_batch_parts`' per-trigger listing AND the accumulated
+    ``batch=<id>`` dir into the single dir ``batch=<max folded id>`` per
+    root — the maintenance pass that bounds `_batch_parts`' per-trigger listing AND the accumulated
     small-file population at O(live batches) instead of O(every batch
     ever drained).
 
@@ -709,8 +689,8 @@ def fold_sidecar_state(
       every reader it is ordered exactly where its newest constituent
       was: ``_batch_parts(before=b)`` includes it iff it included all
       its constituents (any replayable batch b satisfies b > every
-      committed id < upto — the fold must only run between drains, when
-      all batch ids below ``upto`` are checkpoint-committed).
+      committed id — the fold must only run between drains, when all
+      batch ids are checkpoint-committed).
     - **Layout-preserving.** Signature rows stay banded and
       bucket-partitioned (same PartitionFilters pruning, same
       one-file-per-(batch,bucket) shape); flag deltas pre-aggregate to
@@ -728,8 +708,8 @@ def fold_sidecar_state(
     or from the maintenance CLI) — never concurrently with an active
     drain on the same checkpoint.
     """
-    n = _fold_root(spark, sig_dir, upto, bucketed=True)
-    n += _fold_root(spark, flags_dir, upto, bucketed=False)
+    n = _fold_root(spark, sig_dir, bucketed=True)
+    n += _fold_root(spark, flags_dir, bucketed=False)
     return n
 
 
@@ -778,11 +758,7 @@ def minhash_sidecar_dedup_available_now(
     sig_dir: str,
     flags_dir: str,
     checkpoint_dir: str,
-    threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
     n_buckets: int = 8,
-    broadcast_batch: bool = True,
     stats_dir: str | None = None,
 ) -> DataFrame:
     """Streaming incremental near-dup screening — the arriving-shard dedup
@@ -793,8 +769,9 @@ def minhash_sidecar_dedup_available_now(
     1. shingles + MinHash-signs ONLY the arriving docs (the corpus side is
        never re-shingled — its signature side-car is the state),
     2. LSH-band-joins the batch against side-car ∪ batch for candidate
-       pairs, scoring signature-estimated Jaccard (matching-component
-       fraction — a k/num_hashes grid, bit-exact cross-engine),
+       pairs (16 hashes in 4 bands of 4), scoring signature-estimated
+       Jaccard (matching-component fraction — a k/16 grid, bit-exact
+       cross-engine) and keeping pairs at ≥ 0.5,
     3. attributes every matched pair to its GREATEST doc_id and writes the
        batch's signature rows and per-doc flag DELTAS each to their own
        ``batch=<id>`` subdirectory.
@@ -823,10 +800,8 @@ def minhash_sidecar_dedup_available_now(
       trigger (maxFilesPerTrigger / maxBytesPerTrigger) — broadcasts
       into a map-side hash join against the pruned scan, and the
       signature estimate is computed INLINE from the sig arrays both
-      rows carry (no join-back against the corpus). For triggers sized
-      past broadcast limits, pass ``broadcast_batch=False``: the join
-      degrades to a shuffle of the pruned buckets only, never the whole
-      side-car. Periodic small-file compaction of old ``batch=`` dirs is
+      rows carry (no join-back against the corpus). Periodic small-file
+      compaction of old ``batch=`` dirs is
       the `compact` CLI's job (layout-preserving; ids stay).
 
     Every aggregate is CONFLUENT (SUM matches / MIN partner / MAX
@@ -851,13 +826,12 @@ def minhash_sidecar_dedup_available_now(
     )
 
     spark = docs.sparkSession
-    rows = num_hashes // bands
 
     def banded(sig_df: DataFrame) -> DataFrame:
         b = sig_df.select(
             "doc_id",
             "sig",
-            F.posexplode(band_keys(F.col("sig"), bands, rows)).alias(
+            F.posexplode(band_keys(F.col("sig"), 4, 4)).alias(
                 "band_idx", "band_key"
             ),
         )
@@ -883,11 +857,9 @@ def minhash_sidecar_dedup_available_now(
         # jobs per trigger whose scheduling overhead dominated the probe's
         # phase timings at demo scale). Everything downstream derives from
         # bb: the doc-grain base rows are the band_idx == 0 slice (every
-        # non-empty doc emits bands 0..bands-1), and batch emptiness falls
+        # non-empty doc emits bands 0..3), and batch emptiness falls
         # out of the hot-bucket collect below.
-        bb = banded(
-            minhash_signature_df(shingle_rows(batch_df), num_hashes)
-        ).localCheckpoint()
+        bb = banded(minhash_signature_df(shingle_rows(batch_df))).localCheckpoint()
         # the arriving batch's collision footprint: ≤ n_buckets ints — a
         # bounded driver collect that turns into partition pruning below
         hot_buckets = [
@@ -944,7 +916,6 @@ def minhash_sidecar_dedup_available_now(
             probe = prior.unionByName(bb)
         else:
             probe = bb
-        build = F.broadcast(bb) if broadcast_batch else bb
 
         def stats_pass() -> None:
             # driver-checkable bounded-read evidence: the PHYSICAL file
@@ -965,7 +936,7 @@ def minhash_sidecar_dedup_available_now(
             _write_sidecar_stats(spark, stats_dir, batch_id,
                                  len(hot_buckets), files_read, files_total)
 
-        # dedup pairs FIRST, then score: a pair colliding in all `bands`
+        # dedup pairs FIRST, then score: a pair colliding in all 4
         # bands would otherwise pay the 16-element signature-agreement
         # aggregate once per colliding band row. est_jaccard is
         # pair-deterministic (and symmetric in the two signatures), so
@@ -973,7 +944,7 @@ def minhash_sidecar_dedup_available_now(
         est = (
             probe.alias("p")
             .join(
-                build.alias("b"),
+                F.broadcast(bb).alias("b"),
                 (F.col("p.band_idx") == F.col("b.band_idx"))
                 & (F.col("p.band_key") == F.col("b.band_key"))
                 & (F.col("p.doc_id") != F.col("b.doc_id")),
@@ -996,12 +967,12 @@ def minhash_sidecar_dedup_available_now(
                         F.lit(0),
                         lambda acc, x: acc + x,
                     )
-                    / F.lit(float(num_hashes))
+                    / F.lit(16.0)
                 ).alias("est_jaccard"),
             )
         )
         hits = (
-            est.filter(F.col("est_jaccard") >= threshold)
+            est.filter(F.col("est_jaccard") >= 0.5)
             .groupBy("did")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_matches"),
@@ -1034,9 +1005,9 @@ def minhash_sidecar_dedup_available_now(
             # banded side-car state: one file per bucket per batch — the
             # hash repartition keys every bucket's rows to ONE task, and
             # the explicit width (= hot-bucket count, known from the
-            # collect above) keeps the exchange at exactly as many tasks
-            # as output files instead of spark.sql.shuffle.partitions
-            # mostly-empty ones
+            # collect above) keeps the exchange at most len(hot_buckets)
+            # tasks instead of spark.sql.shuffle.partitions mostly-empty
+            # ones; partitionBy still writes one file per (batch, bucket)
             bb.repartition(len(hot_buckets), "bucket").write.partitionBy(
                 "bucket"
             ).mode("overwrite").parquet(f"{sig_dir}/batch={batch_id}")

@@ -491,3 +491,47 @@ def test_bloom_bitset_is_tiny_and_broadcast(spark):
     # more exchanges (the probe-side fan_out is a round-robin exchange,
     # deliberately outside this regex: it moves no data to a key).
     assert len(shuffles) <= 5, (shuffles, plan)
+
+
+def test_fan_out_width(spark, tmp_path):
+    """fan_out widens an under-partitioned scan to one task per 20 KiB of
+    input, capped at defaultParallelism, and leaves tiny or already-wide
+    scans untouched (returns the same DataFrame)."""
+    import math
+    import os
+
+    from gridiron_spark.io.tables import fan_out
+
+    par = spark.sparkContext.defaultParallelism
+    assert par > 1
+
+    def write(name, n_rows, n_files):
+        # md5 hex strings barely compress, so bytes on disk track n_rows
+        path = str(tmp_path / name)
+        (
+            spark.range(n_rows)
+            .select("id", F.md5(F.col("id").cast("string")).alias("text"))
+            .repartition(n_files)
+            .write.parquet(path)
+        )
+        files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+        assert len(files) == n_files
+        return spark.read.parquet(path), sum(
+            os.path.getsize(os.path.join(path, f)) for f in files
+        )
+
+    tiny, tiny_bytes = write("tiny", 100, 1)
+    assert tiny_bytes < 20 << 10
+    assert fan_out(tiny) is tiny
+
+    mid, mid_bytes = write("mid", 2500, 1)
+    assert 80_000 < mid_bytes < 140_000, mid_bytes
+    out = fan_out(mid)
+    assert out is not mid
+    want = min(par, math.ceil(mid_bytes / (20 << 10)))
+    assert out.rdd.getNumPartitions() == want
+    assert out.count() == 2500
+
+    wide, _ = write("wide", 20 * par, par)
+    assert wide.rdd.getNumPartitions() >= par
+    assert fan_out(wide) is wide
